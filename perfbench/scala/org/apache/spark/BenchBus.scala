@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Waits until the listener bus has delivered every queued event, so a
+  * listener's totals are complete before they are read. Lives in Spark's
+  * package because the bus is package-private.
+  */
+object BenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
